@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 
 /** Round bench harness. Round-9 rework (VERDICT r8 item 1): the r7/r8
@@ -43,13 +44,14 @@ object Bench {
     * full 113-query map (~2.6 KB at r4 precision) can never ride on it —
     * that is exactly the r7/r8 `parsed: null` overflow that made r9 move
     * per-query detail into the artifact. Compromise: carry the LARGEST
-    * medians, centisecond-rounded, biggest first, stopping when either
-    * the whole line would exceed `lineBudget` bytes or the next median
-    * falls under `minSec` (0.1 s — the driver's own per-query regression
-    * gate is >10% AND >0.1 s, so sub-0.1 s queries cannot regress
-    * reportably). The COMPLETE map stays in the artifact; this restores
-    * driver-side per-query and scaling visibility for every query large
-    * enough to matter without risking the one-line contract. */
+    * medians, centisecond-rounded, biggest first, skipping any entry that
+    * would push the whole line past `lineBudget` bytes (a shorter later
+    * entry may still fit) and every median under `minSec` (0.1 s — the
+    * driver's own per-query regression gate is >10% AND >0.1 s, so
+    * sub-0.1 s queries cannot regress reportably). The COMPLETE map
+    * stays in the artifact; this restores driver-side per-query and
+    * scaling visibility for every query large enough to matter without
+    * risking the one-line contract. */
   private[graft] def packQueries(med: Seq[(String, Double)], baseLen: Int,
       lineBudget: Int = 1800, minSec: Double = 0.1): String = {
     val sb = new StringBuilder("{")
@@ -74,12 +76,13 @@ object Bench {
     * regression needed an out-of-band rebuilt-binary control to attribute
     * (~1.4× slower host); this makes every artifact self-normalizing.
     * The workload is versioned (`control_id`) and must NEVER change
-    * within a version — a changed workload is a new id. Median of 3
-    * after `warmups` untimed runs: the FIRST point of a run needs 3
+    * within a version — a changed workload is a new id. The FIRST point
+    * of a run is a median of 5 after `warmups` untimed runs and needs 3
     * (measured: with 1, the before-pass point read 19.3 s vs 4.2 s fully
     * warm — C2 compilation of the control shape spans several executions
     * and would have inflated the spread floor to ~277%, flagging every
-    * future delta as noise); later same-JVM points need only 1.
+    * future delta as noise); later same-JVM points are a median of 3
+    * after 1.
     */
   val ControlId = "range30m-xxhash-agg1m-v1"
 
@@ -160,7 +163,7 @@ object Bench {
     val f = cwd.resolve("bench").resolve("suite_noise.json")
     if (!java.nio.file.Files.isRegularFile(f)) return None
     val txt = try new String(java.nio.file.Files.readAllBytes(f),
-      java.nio.charset.StandardCharsets.UTF_8) catch { case _: Throwable => return None }
+      java.nio.charset.StandardCharsets.UTF_8) catch { case NonFatal(_) => return None }
     def str(k: String): Option[String] =
       ("\"" + k + "\"\\s*:\\s*\"([^\"]*)\"").r.findFirstMatchIn(txt).map(_.group(1))
     def num(k: String): Option[Double] =
@@ -218,7 +221,7 @@ object Bench {
       .getOrElse(cwd.resolve("bench").resolve("last_bench.json"))
     if (!java.nio.file.Files.isRegularFile(f)) return None
     val txt = try new String(java.nio.file.Files.readAllBytes(f),
-      java.nio.charset.StandardCharsets.UTF_8) catch { case _: Throwable => return None }
+      java.nio.charset.StandardCharsets.UTF_8) catch { case NonFatal(_) => return None }
     def num(k: String): Option[Double] =
       ("\"" + k + "\"\\s*:\\s*(-?[0-9]+(?:\\.[0-9]+)?(?:[eE][+-]?[0-9]+)?)").r
         .findFirstMatchIn(txt).map(_.group(1).toDouble)
@@ -319,7 +322,7 @@ object Bench {
       .sortBy(-_._1)
     candidates.iterator.flatMap { case (rn, f) =>
       val txt = try new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8) catch { case _: Throwable => "" }
+        java.nio.charset.StandardCharsets.UTF_8) catch { case NonFatal(_) => "" }
       def num(k: String): Option[Double] =
         ("\"" + k + "\"\\s*:\\s*(-?[0-9]+(?:\\.[0-9]+)?(?:[eE][+-]?[0-9]+)?)").r
           .findFirstMatchIn(txt).map(_.group(1).toDouble)
@@ -385,15 +388,18 @@ object Bench {
     spark.sparkContext.setLogLevel("ERROR")
     // Untimed warmup: exercises codegen/JIT/parquet-footer paths once so the
     // first timed query doesn't absorb JVM warmup (flagship on sf0.001).
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    try SparkEntry.entry(spark).count() catch {
+      case NonFatal(e) => System.err.println(s"[bench] warmup failed: ${e.getMessage}")
+    }
     // Host-speed denominator, INTERLEAVED with the passes (VERDICT r14
     // item 2): a single up-front calibration point let contention drift
     // DURING the ~1 min run masquerade as binary speed change — r14's
     // −28.2% "improvement" was largely a slow r13 control. Three points
-    // (before / after the middle pass / after the last pass), each itself
-    // a median-of-3; the denominator is their median, and their relative
-    // spread is the run's observable same-binary noise floor — any
-    // round-over-round delta below it is flagged as noise.
+    // (before / after the middle pass / after the last pass), the first a
+    // median-of-5 and the others a median-of-3; the denominator is their
+    // median, and their relative spread is the run's observable
+    // same-binary noise floor — any round-over-round delta below it is
+    // flagged as noise.
     val controlPoints = scala.collection.mutable.ArrayBuffer.empty[Double]
     val control2Points = scala.collection.mutable.ArrayBuffer.empty[Double]
     controlPoints += r4(controlSeconds(spark, warmups = 3))
@@ -407,7 +413,9 @@ object Bench {
       for ((name, fn) <- named) {
         System.gc() // don't charge query N with query N-1's garbage
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        try fn(spark, sfDir).count() catch {
+          case NonFatal(e) => System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        }
         samples(name) = samples(name) :+ (System.nanoTime() - t0) / 1e9
       }
       if (pass == midPass && passes > 1) {
@@ -417,7 +425,7 @@ object Bench {
     }
     controlPoints += r4(controlSeconds(spark))
     control2Points += r4(control2Seconds(spark))
-    graft.operators.Dedup.releaseCaches(spark) // free memoized persists
+    graft.SessionLedger.release(spark)
     def median(v: Vector[Double]): Double = {
       val s = v.sorted
       if (s.length % 2 == 1) s(s.length / 2)

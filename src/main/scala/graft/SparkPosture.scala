@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Cluster-posture session settings shared by the harness mains
+/** Cluster-posture session settings shared by the production job
+  * (pipeline.OlistMain) and the harness mains
   * (Verify/Bench/TimeQ/VerifyOne/ExplainExec).
   *
   * `spark.io.compression.codec=zstd`: the sf100 decade showed the

@@ -103,7 +103,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    graft.operators.Dedup.releaseCaches(spark) // free memoized persists
+    graft.SessionLedger.release(spark)
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }
       .mkString("{", ",", "}")

@@ -1,11 +1,9 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.Q
+import graft.{Q, SessionLedger}
 import graft.functions.Similarity
 import graft.sources.Tables
 
@@ -33,103 +31,9 @@ import graft.sources.Tables
   */
 object Dedup {
 
-  /** Session-scoped memo of persisted intermediates shared across the dedup
-    * family (shingles, MinHash signatures, SimHash signatures, exact pairs).
-    * Keyed by (session reference, data dir, tag) so repeated query
-    * invocations in one session reuse a single cache entry instead of
-    * stacking persisted copies. Holding the SparkSession itself in the key
-    * makes the key unique for the session's whole lifetime (an identity hash
-    * alone could be recycled after a stopped session is collected; the strong
-    * reference here prevents that). `releaseCaches` frees everything for a
-    * session — wired into Bench, Verify, and the dedup specs' teardown so
-    * persisted blocks never outlive the batch that needed them. */
-  /** Storage level for memoized dedup intermediates. Deserialized reuse
-    * (MEMORY_AND_DISK) is fastest when the heap is roomy — but deserialized
-    * block sizes are SizeEstimator ESTIMATES, and under a tight heap the
-    * underestimation lets the store overfill physical heap before eviction
-    * kicks in: the r15 2 GiB full-registry run died of raw
-    * OutOfMemoryError in q48 with every family memo warm, while q48 ALONE
-    * at 2 GiB passed. Serialized blocks are byte-exact accounted and ~4×
-    * smaller (the same finding that moved the CC edge checkpoint to SER at
-    * sf100, r12), so small heaps trade per-reuse deserialization CPU for
-    * survival. Auto: SER below a 6 GiB max heap; `GRAFT_MEMO_SER`=1/0
-    * forces either side for probes. */
-  /** Pure selection logic, split out so the spec can pin every branch
-    * without forking a JVM per heap size (MemoLevelSpec). */
-  private[graft] def memoLevelFor(forced: Option[String],
-      maxHeapBytes: Long): StorageLevel = forced match {
-    case Some("1") => StorageLevel.MEMORY_AND_DISK_SER
-    case Some("0") => StorageLevel.MEMORY_AND_DISK
-    case _ =>
-      if (maxHeapBytes < (6L << 30)) StorageLevel.MEMORY_AND_DISK_SER
-      else StorageLevel.MEMORY_AND_DISK
-  }
-
-  private[operators] val memoLevel: StorageLevel =
-    memoLevelFor(sys.env.get("GRAFT_MEMO_SER"), Runtime.getRuntime.maxMemory)
-
-  private val memoCache = TrieMap.empty[(SparkSession, String, String), DataFrame]
-  private val hookedSessions =
-    TrieMap.empty[SparkSession, org.apache.spark.scheduler.SparkListener]
-
-  private[operators] def memo(spark: SparkSession, dir: String, tag: String)(
-      build: => DataFrame): DataFrame = memoCache.synchronized {
-    // synchronized: TrieMap.getOrElseUpdate may run `build` twice under a
-    // concurrent first access, persisting an orphan copy releaseCaches could
-    // never free. On a session's first entry, hook application-end so a
-    // session stopped WITHOUT a manual releaseCaches doesn't pin its plans
-    // and persisted blocks in this JVM-global map forever. The listener
-    // reference is kept so releaseCaches can deregister it — repeated
-    // memo/release cycles must not accumulate listeners on the context.
-    hookedSessions.getOrElseUpdate(spark, {
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          releaseCaches(spark)
-      }
-      spark.sparkContext.addSparkListener(l)
-      l
-    })
-    memoCache.getOrElseUpdate((spark, dir, tag), build)
-  }
-
-  /** Unpersist and forget every dedup intermediate cached for `spark`, and
-    * deregister the session's application-end hook. Call after a dedup batch
-    * completes (specs/bench teardown); also runs automatically when the
-    * session's application ends. */
-  def releaseCaches(spark: SparkSession): Unit = {
-    memoCache.keys.filter(_._1 eq spark).foreach { k =>
-      memoCache.remove(k).foreach(df => try df.unpersist(blocking = false) catch {
-        case _: Throwable => () // session already stopped: nothing to free
-      })
-    }
-    hookedSessions.remove(spark).foreach { l =>
-      try spark.sparkContext.removeSparkListener(l) catch {
-        case _: Throwable => () // context already stopped: nothing to remove
-      }
-    }
-    // the iterative operators' localCheckpoint blocks (final CC/PageRank/BPE
-    // iterates) live in their own session ledger — releaseCaches is the
-    // documented family-teardown entry point, so it frees those too
-    Checkpoints.release(spark)
-  }
-
-  /** Per-dir eviction for LONG-LIVED sessions (VERDICT r9 item 4): a
-    * session profiling many corpus dirs accretes one cache entry per
-    * (dir, tag) until `releaseCaches` — fine for Bench/Verify, which
-    * release at batch end, but an interactive session that has finished
-    * with one corpus should drop just that corpus's persisted blocks and
-    * keep the rest warm. */
-  def releaseCachesFor(spark: SparkSession, dir: String): Unit =
-    memoCache.keys.filter(k => (k._1 eq spark) && k._2 == dir).foreach { k =>
-      memoCache.remove(k).foreach(df => try df.unpersist(blocking = false) catch {
-        case _: Throwable => () // session already stopped: nothing to free
-      })
-    }
-
-  /** Test-only view of which (dir, tag) memo entries a session holds. */
-  private[graft] def memoKeysFor(spark: SparkSession): Set[(String, String)] =
-    memoCache.keys.collect { case (s, d, t) if s eq spark => (d, t) }.toSet
+  /** `SessionLedger.release`, under the name the benchmark harness
+    * (perfbench) calls. */
+  def releaseCaches(spark: SparkSession): Unit = SessionLedger.release(spark)
 
   /** Exploded, hashed, per-doc-distinct shingle relation shared by the whole
     * family, carrying TWO identities per word-3-gram: `h` = xxhash64 (an
@@ -149,7 +53,7 @@ object Dedup {
     * one small parquet file (one input split), which would otherwise
     * serialize everything downstream on a single task. */
   private def shingled(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "shingled") {
+    SessionLedger.persisted(spark, dir, "shingled") {
       // positions explode from a sequence and each 3-gram is concatenated
       // in the fused post-explode projection — the array-of-shingles
       // `transform` HOF this replaces is interpreted and materialized every
@@ -170,7 +74,6 @@ object Dedup {
           graft.expressions.Md5Prefix.of(col("shingle").cast("binary"), 15)
             .as("x60"))
         .distinct()
-        .persist(memoLevel)
     }
 
   /** The shared toks→shingles→exploded oracle CTE prefix mirrored by every
@@ -221,7 +124,7 @@ object Dedup {
     * hot shingles. At test scale (max df = 25 on sf0.1) the guard is a no-op
     * and the DuckDB oracle mirrors it verbatim.
     *
-    * Persisted + memoized (MEMORY_AND_DISK): q31, q48, and q60 consume the
+    * Persisted + memoized (SessionLedger): q31, q48, and q60 consume the
     * same relation; the round-1 GC-pressure concern was measured against
     * unmemoized per-call MEMORY_ONLY persists that stacked copies. The
     * persist holds only pairs at `minJaccard` ≥ 0.1 — every consumer
@@ -231,7 +134,7 @@ object Dedup {
     * explicitly and get their own memo entry. */
   def jaccardPairs(spark: SparkSession, dir: String, maxDocFreq: Int = 1000,
       minJaccard: Double = 0.1): DataFrame =
-    memo(spark, dir, s"jaccardPairs:$maxDocFreq:$minJaccard") {
+    SessionLedger.persisted(spark, dir, s"jaccardPairs:$maxDocFreq:$minJaccard") {
       val ex = shingled(spark, dir)
       val nsh = shingleCounts(spark, dir)
       val hot = ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
@@ -257,7 +160,6 @@ object Dedup {
         .filter(col("jaccard") >= minJaccard)
         .select(col("doc_a"), col("doc_b"), col("na"), col("nb"),
           col("common"), col("jaccard"))
-        .persist(memoLevel)
     }
 
   /** Min-label connected components over an undirected edge list — the
@@ -267,7 +169,7 @@ object Dedup {
     * loop only checks a changed-count per round (the data never leaves the
     * cluster); localCheckpoint truncates the growing lineage. At 100 TB
     * scale the same loop runs with edges pre-partitioned by src. */
-  def connectedComponents(edges: DataFrame): DataFrame = {
+  def connectedComponents(edges: DataFrame, dir: String): DataFrame = {
     // Edge checkpoint is SERIALIZED (MEMORY_AND_DISK_SER): the default
     // level stores deserialized row COPIES memory-first, and at the sf100
     // decade (1.5B symmetric edges) concurrent partition unrolls OOMed a
@@ -275,34 +177,34 @@ object Dedup {
     // are ~4x smaller and evict/spill cleanly; each superstep streams the
     // edges once, so deserialization cost is the right trade at every
     // size. Label checkpoints stay default — they are node-grain (small).
-    val sym = Checkpoints.tracked(
+    val sym = SessionLedger.checkpoint(
       edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .unionByName(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .distinct(), StorageLevel.MEMORY_AND_DISK_SER)
-    // Superseded iterates are dropped EAGERLY (Checkpoints.drop): each
+        .distinct(), dir, StorageLevel.MEMORY_AND_DISK_SER)
+    // Superseded iterates are dropped EAGERLY (SessionLedger.drop): each
     // round's checkpoint is only read by the next round, so live checkpoint
     // blocks stay O(1) instead of O(diameter) — the r15 concurrent-session
-    // spec caught exactly these accumulating past releaseCaches. `sym` and
-    // the FINAL iterate stay live (the returned plan reads the final
-    // iterate) under the session ledger, freed by releaseCaches.
-    var labels = Checkpoints.tracked(
+    // spec caught exactly these accumulating past release. The FINAL
+    // iterate stays live (the returned plan reads it) until the ledger
+    // releases the session or `dir`.
+    var labels = SessionLedger.checkpoint(
       sym.select(col("src").as("doc_id")).distinct()
-        .withColumn("label", col("doc_id")))
+        .withColumn("label", col("doc_id")), dir)
     var prevCp = labels
     var changed = 1L
     while (changed > 0) {
       val nbrMin = sym.join(labels.select(col("doc_id").as("dst"), col("label")), Seq("dst"))
         .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
-      val updated = Checkpoints.tracked(labels
+      val updated = SessionLedger.checkpoint(labels
         .join(nbrMin.withColumnRenamed("src", "doc_id"), Seq("doc_id"), "left")
         .select(col("doc_id"), col("label"),
-          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("new_label")))
+          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("new_label")), dir)
       changed = updated.filter(col("new_label") < col("label")).count()
-      Checkpoints.drop(prevCp)
+      SessionLedger.drop(prevCp)
       prevCp = updated
       labels = updated.select(col("doc_id"), col("new_label").as("label"))
     }
-    Checkpoints.drop(sym) // only the loop reads the edge checkpoint
+    SessionLedger.drop(sym) // only the loop reads the edge checkpoint
     labels.select(col("doc_id"), col("label").as("cluster_rep"))
   }
 
@@ -338,10 +240,10 @@ object Dedup {
     * both consume them, and the label-propagation loop is multiple Spark
     * jobs, so one materialization per (session, dir) matters. */
   private def clusters05(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "clusters05") {
+    SessionLedger.persisted(spark, dir, "clusters05") {
       val edges = jaccardPairs(spark, dir).filter(col("jaccard") >= 0.5)
         .select(col("doc_a"), col("doc_b"))
-      connectedComponents(edges).persist(memoLevel)
+      connectedComponents(edges, dir)
     }
 
   /** q48 — near-dup clustering: Jaccard ≥ 0.5 pairs → connected components
@@ -458,13 +360,12 @@ object Dedup {
     * q113's production survivorship chain; referenced from several join
     * sides, so one materialization per (session, dir). */
   private def minhashSig(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "minhashSig") {
+    SessionLedger.persisted(s, dir, "minhashSig") {
       val xm = col("x60") % MinHashP
       shingled(s, dir).groupBy(col("doc_id")).agg(
         min((xm * minHashA(0) + minHashB(0)) % MinHashP).as("mh0"),
         (1 until LshNumHashes).map(i =>
           min((xm * minHashA(i) + minHashB(i)) % MinHashP).as(s"mh$i")): _*)
-        .persist(memoLevel)
     }
 
   /** LSH candidate pairs: 4 bands × 4 rows; docs sharing any band hash
@@ -497,7 +398,7 @@ object Dedup {
     * no stage anywhere in this chain enumerates all pairs. Memoized +
     * persisted: q32 (reporting) and q113 (survivorship) both consume it. */
   private def lshVerified(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "lshVerified") {
+    SessionLedger.persisted(s, dir, "lshVerified") {
       val ex = shingled(s, dir)
       val nsh = shingleCounts(s, dir)
       val ea = ex.select(col("doc_id").as("doc_a"), col("h"))
@@ -512,7 +413,6 @@ object Dedup {
         .withColumn("jaccard",
           col("common").cast("double") / (col("na") + col("nb") - col("common")))
         .select(col("doc_a"), col("doc_b"), col("jaccard"))
-        .persist(memoLevel)
     }
 
   val q32MinHashLsh: Q = Q(
@@ -575,7 +475,7 @@ object Dedup {
   /** Memoized 60-bit SimHash signatures (±1 bit votes over the portable
     * shingle identity, ONE shuffle), shared by q33 and q79. */
   private def simhashSig(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "simhashSig") {
+    SessionLedger.persisted(s, dir, "simhashSig") {
       val bits = 60
       val votes = shingled(s, dir).groupBy(col("doc_id")).agg(
         sum(when(shiftright(col("x60"), 0).bitwiseAND(1) === 1, 1).otherwise(-1)).as("v0"),
@@ -585,7 +485,6 @@ object Dedup {
       votes.select(col("doc_id"),
         (0 until bits).map(b => when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
           .reduce(_ + _).as("simhash"))
-        .persist(memoLevel) // both sides of the band join
     }
 
   /** Banded SimHash pair search: pigeonhole-complete for hamming ≤
@@ -818,8 +717,8 @@ object Dedup {
       import org.apache.spark.sql.expressions.Window
       val edges = lshVerified(s, dir).filter(col("jaccard") >= 0.5)
         .select(col("doc_a"), col("doc_b"))
-      val labels = memo(s, dir, "lshClusters05") {
-        connectedComponents(edges).persist(memoLevel)
+      val labels = SessionLedger.persisted(s, dir, "lshClusters05") {
+        connectedComponents(edges, dir)
       }
       val labeled = qualityScores(s, dir).join(labels, Seq("doc_id"), "left")
         .withColumn("cluster_rep", coalesce(col("cluster_rep"), col("doc_id")))

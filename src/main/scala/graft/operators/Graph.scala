@@ -65,11 +65,11 @@ object Graph {
       for (_ <- 0 until iters) {
         // localCheckpoint truncates the growing lineage (same device as the
         // q48 label-propagation loop); each superstep is one shuffle. The
-        // tracked/drop pair keeps live checkpoint blocks O(1) across the
-        // loop and lets releaseCaches free the final iterate (r15: bare
+        // checkpoint/drop pair keeps live checkpoint blocks O(1) across the
+        // loop and lets the ledger free the final iterate (r15: bare
         // localCheckpoint blocks outlive every teardown).
-        val next = Checkpoints.tracked(step(es, outdeg, r, nNodes))
-        Checkpoints.drop(r)
+        val next = graft.SessionLedger.checkpoint(step(es, outdeg, r, nNodes), dir)
+        graft.SessionLedger.drop(r)
         r = next
       }
       r

@@ -219,7 +219,7 @@ object Learn {
     * web-scale corpus yields 10⁸–10¹⁰ distinct bigrams (tens of GB), and
     * Spark hard-fails any broadcast above 8 GB, so an unconditionally
     * forced `broadcast()` hint is a scale-killer at the 100 TB design
-    * point. memoLevel-style (Dedup.scala) pure decision + env override:
+    * point. Pure decision + env override:
     * hint the broadcast only while the documents corpus's ON-DISK
     * footprint — one filesystem metadata call, valid on HDFS/S3 via the
     * Hadoop FS API, and a hard upper bound on the LM's distinct-bigram

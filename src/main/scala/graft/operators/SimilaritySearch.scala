@@ -440,28 +440,14 @@ object SimilaritySearch {
       bitsPerBand: Int, threshold: Double): DataFrame =
     withClusterSizes(clusterLabels(spark, dir, bands, bitsPerBand, threshold))
 
-  /** Cluster stage over an ALREADY-MATERIALIZED pair relation
-    * (vec_a, vec_b, cosine) — the exact composition `embeddingClusters`
-    * applies after `lshPairs`, exposed separately for the restart/audit
-    * path a production pipeline actually has: candidate pairs are the
-    * expensive stage and get persisted (and independently verified —
-    * tools/check_lsh_sampled.py), so clustering re-runs from the stored
-    * relation instead of re-deriving ~N·bands shuffle rows. Same
-    * connectedComponents + size-window body as the registry q111, so the
-    * two can't drift. */
-  def clustersFromPairs(pairs: DataFrame, threshold: Double): DataFrame =
-    withClusterSizes(Dedup.connectedComponents(
-      pairs.filter(col("cosine") >= threshold)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))))
-
   /** lshPairs edges → min-label component labels (doc_id, cluster_rep) —
-    * the single body both the probe form and the memoized registry entry
+    * the single body both `embeddingClusters` and the memoized registry entry
     * compose, so the two can't drift. */
   private def clusterLabels(spark: SparkSession, dir: String, bands: Int,
       bitsPerBand: Int, threshold: Double): DataFrame =
     Dedup.connectedComponents(
       lshPairs(spark, dir, bands, bitsPerBand, threshold)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
+        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")), dir)
 
   private def withClusterSizes(labels: DataFrame): DataFrame =
     labels.select(col("doc_id").as("vec_id"), col("cluster_rep"))
@@ -473,10 +459,9 @@ object SimilaritySearch {
     (s, dir) => {
       // memoized like q48's clusters05: the label-propagation loop runs
       // count() actions per superstep, so repeated in-session invocations
-      // must reuse one materialization (released with Dedup.releaseCaches)
-      val labels = Dedup.memo(s, dir, "embClusters035") {
+      // must reuse one materialization (held by graft.SessionLedger)
+      val labels = graft.SessionLedger.persisted(s, dir, "embClusters035") {
         clusterLabels(s, dir, bands = 8, bitsPerBand = 8, threshold = 0.35)
-          .persist(Dedup.memoLevel)
       }
       withClusterSizes(labels)
     },

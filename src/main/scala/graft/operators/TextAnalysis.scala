@@ -768,7 +768,7 @@ object TextAnalysis {
     * driver holds only the merge table. */
   def bpeTrain(spark: org.apache.spark.sql.SparkSession, dir: String,
       rounds: Int): Seq[(String, String, Long)] =
-    bpeTrainFrom(initialSymbolState(spark, dir), rounds, maxBatch = 1)._1
+    bpeTrainFrom(initialSymbolState(spark, dir), dir, rounds, maxBatch = 1)._1
 
   /** Batched BPE training: EXACTLY the sequential `bpeTrain` merge table,
     * in ~merges/maxBatch Spark supersteps instead of one per merge — the
@@ -777,7 +777,7 @@ object TextAnalysis {
     * `bpeTrainFrom` for the exactness argument. */
   def bpeTrainBatched(spark: org.apache.spark.sql.SparkSession, dir: String,
       merges: Int, maxBatch: Int = 16): (Seq[(String, String, Long)], Int) =
-    bpeTrainFrom(initialSymbolState(spark, dir), merges, maxBatch)
+    bpeTrainFrom(initialSymbolState(spark, dir), dir, merges, maxBatch)
 
   /** Word-frequency symbol state (syms: Array[String], freq) — the
     * Zipf-collapsed vocabulary-grain training state, NOT corpus-grain. */
@@ -811,14 +811,15 @@ object TextAnalysis {
     * accepted pairs, in the accepted order, with the same recorded counts.
     * Ties WITHIN the batch are fine (their relative order is the pinned
     * tiebreak); a tie WITH the first rejected candidate shrinks the batch
-    * to the strict-drop boundary (worst case 1 = sequential behavior). */
-  private[graft] def bpeTrainFrom(init: DataFrame, merges: Int,
+    * to the strict-drop boundary (worst case 1 = sequential behavior).
+    * Loop checkpoints are recorded under `dir` in the session ledger. */
+  private[graft] def bpeTrainFrom(init: DataFrame, dir: String, merges: Int,
       maxBatch: Int): (Seq[(String, String, Long)], Int) = {
     require(maxBatch >= 1, "maxBatch must be >= 1")
-    // tracked/drop (not bare localCheckpoint + Dataset.unpersist: the
+    // checkpoint/drop (not bare localCheckpoint + Dataset.unpersist: the
     // latter is a silent no-op on checkpointed plans — no CacheManager
     // entry — so every batch's blocks leaked until session end, r15)
-    var cur = graft.operators.Checkpoints.tracked(init)
+    var cur = graft.SessionLedger.checkpoint(init, dir)
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
     var steps = 0
     var exhausted = false
@@ -850,14 +851,14 @@ object TextAnalysis {
           m -= 1
         val batch = cands.take(m)
         out ++= batch
-        val next = graft.operators.Checkpoints.tracked(cur.select(
+        val next = graft.SessionLedger.checkpoint(cur.select(
           batch.foldLeft(col("syms")) { case (c, (l, r, _)) => applyMerge(c, l, r) }
-            .as("syms"), col("freq")))
-        graft.operators.Checkpoints.drop(cur)
+            .as("syms"), col("freq")), dir)
+        graft.SessionLedger.drop(cur)
         cur = next
       }
     }
-    graft.operators.Checkpoints.drop(cur)
+    graft.SessionLedger.drop(cur)
     (out.toSeq, steps)
   }
 

@@ -144,7 +144,7 @@ object Events {
         count(lit(1)).as("event_count"),
         // rsd 0.01: the 5% flag is then ~5 standard errors — the DEFAULT
         // rsd (0.05) measured -6.7% deviation at sf0.1 and tripped it
-        // (graft.tools.SketchDev prints the deviations per sf)
+        // (PLANS.md "Sketch error bounds (q19)")
         approx_count_distinct(col("user_id"), 0.01).as("approx_users"),
         percentile_approx(col("value"), lit(0.5), lit(10000)).as("approx_median"),
         expr("percentile(value, 0.5)").as("exact_median"))

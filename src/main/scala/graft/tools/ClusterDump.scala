@@ -48,7 +48,7 @@ object ClusterDump {
       json.getBytes("UTF-8"))
     println(f"[clusterdump] dir=$dir bands=$bands bits=$bits thr=$thr " +
       f"t=${(System.nanoTime() - t0) / 1e9}%.1f s -> $out")
-    graft.operators.Dedup.releaseCaches(spark)
+    graft.SessionLedger.release(spark)
     spark.stop()
   }
 

@@ -39,7 +39,7 @@ object CodegenCensus {
         f"compilations=${t1 - t0} mean_compile_ms=$mean%.1f " +
         f"cum_sources=$n1")
     }
-    graft.operators.Dedup.releaseCaches(spark)
+    graft.SessionLedger.release(spark)
     spark.stop()
   }
 }

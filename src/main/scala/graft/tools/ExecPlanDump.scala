@@ -32,7 +32,7 @@ object ExecPlanDump {
           txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         println(s"[dump] $name")
       }
-    graft.operators.Dedup.releaseCaches(spark)
+    graft.SessionLedger.release(spark)
     spark.stop()
   }
 }

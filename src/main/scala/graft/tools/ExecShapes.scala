@@ -44,7 +44,7 @@ object ExecShapes {
           println(s"[shape] $name ERROR ${e.getClass.getSimpleName}: ${e.getMessage}")
         }
       }
-    graft.operators.Dedup.releaseCaches(spark)
+    graft.SessionLedger.release(spark)
     spark.stop()
   }
 }

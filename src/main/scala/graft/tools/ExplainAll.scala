@@ -36,7 +36,7 @@ object ExplainAll {
           txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         println(s"[explainall] $name -> ${name}_$suffix.txt")
       }
-    graft.operators.Dedup.releaseCaches(spark)
+    graft.SessionLedger.release(spark)
     spark.stop()
   }
 }

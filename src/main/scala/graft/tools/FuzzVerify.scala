@@ -405,7 +405,7 @@ object FuzzVerify {
         System.err.println(s"[fuzz] $name failed: ${e.getMessage}")
       }
     }
-    graft.operators.Dedup.releaseCaches(spark) // jaccard templates memoize
+    graft.SessionLedger.release(spark) // jaccard templates memoize
     val json = insts
       .map { case (name, inst) => s"${Verify.jsonStr(name)}: ${Verify.jsonStr(inst.sql)}" }
       .mkString("{", ",", "}")

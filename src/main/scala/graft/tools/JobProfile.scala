@@ -50,7 +50,7 @@ object JobProfile {
       println(f"[jobs] $name rep=$r wall=$wall%.3f njobs=${jobs.size} " +
         f"jobsum=$jsum%.2f ${parts.mkString(" ")}")
     }
-    graft.operators.Dedup.releaseCaches(spark)
+    graft.SessionLedger.release(spark)
     spark.stop()
   }
 }

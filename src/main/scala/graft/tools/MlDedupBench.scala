@@ -64,7 +64,7 @@ object MlDedupBench {
       graft.SparkEntry.queries("q32_dedup_minhash_lsh")(spark, dir)
         .filter(col("jaccard") >= 0.5).count()
     }
-    graft.operators.Dedup.releaseCaches(spark)
+    graft.SessionLedger.release(spark)
     println(s"[mlbench] custom pairs@>=0.5: $custom, ml pairs@dist<0.5: $ml")
     spark.stop()
   }

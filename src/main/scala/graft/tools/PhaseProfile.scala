@@ -35,7 +35,7 @@ object PhaseProfile {
         f"plan=${(t2 - t1) / 1e9}%.3f exec=${(t3 - t2) / 1e9}%.3f " +
         f"total=${(t3 - t0) / 1e9}%.3f")
     }
-    graft.operators.Dedup.releaseCaches(spark)
+    graft.SessionLedger.release(spark)
     spark.stop()
   }
 }

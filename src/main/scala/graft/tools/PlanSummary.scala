@@ -49,7 +49,7 @@ object PlanSummary {
           println(s"[plan] $name ERROR ${e.getClass.getSimpleName}")
       }
     }
-    graft.operators.Dedup.releaseCaches(spark)
+    graft.SessionLedger.release(spark)
     spark.stop()
   }
 

@@ -4,12 +4,12 @@ import org.apache.spark.sql.SparkSession
 
 /** Long-lived-driver soak (follows the r15 checkpoint-leak fix): a serving
   * driver that runs the dedup/similarity family per request must hold ZERO
-  * growing state across request cycles — before Checkpoints, every cycle
-  * leaked its localCheckpoint blocks, so block count grew linearly until
+  * growing state across request cycles — before checkpoints were tracked,
+  * every cycle leaked its localCheckpoint blocks, so block count grew linearly until
   * the ContextCleaner happened to GC. This probe runs `rounds` cycles of
   * the whole family (one fresh child session per cycle, the multi-tenant
   * shape), releases after each, and records persisted-RDD count, tracked
-  * checkpoint count, memo keys, and heap after GC. PASS = all three
+  * checkpoint count, other SessionLedger entries, and heap after GC. PASS = all three
   * counters return to the pre-cycle baseline every cycle and used heap
   * stays bounded (no monotone growth).
   *
@@ -88,15 +88,16 @@ object SessionSoak {
       sq.processAllAvailable()
       val streamed = s.table(qn).count()
       sq.stop(); s.catalog.dropTempView(qn)
-      graft.operators.Dedup.releaseCaches(s)
-      // releaseCaches unpersists async — give the block manager a moment
+      graft.SessionLedger.release(s)
+      // release unpersists async — give the block manager a moment
       var blocks = root.sparkContext.getPersistentRDDs.size
       val deadline = System.nanoTime() + 15e9.toLong
       while (blocks != baseBlocks && System.nanoTime() < deadline) {
         Thread.sleep(200); blocks = root.sparkContext.getPersistentRDDs.size
       }
-      val ckpts = graft.operators.Checkpoints.trackedIdsFor(s).size
-      val memos = graft.operators.Dedup.memoKeysFor(s).size
+      val held = graft.SessionLedger.entries(s)
+      val ckpts = held.count(_._2 == graft.SessionLedger.Checkpoint)
+      val memos = held.size - ckpts
       val heap = usedHeapMb()
       if (r == 1) firstCycleHeap = heap
       // ADVICE r16 item 5: the serve-loop row check is part of `ok` BEFORE

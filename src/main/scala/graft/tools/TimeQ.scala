@@ -32,7 +32,7 @@ object TimeQ {
       val n = SparkEntry.queries(name)(spark, sfDir).count()
       println(f"[timeq] $name rows=$n t=${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
-    graft.operators.Dedup.releaseCaches(spark)
+    graft.SessionLedger.release(spark)
     spark.stop()
   }
 }

@@ -53,7 +53,7 @@ object VerifyOne {
     val subset = SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       subset.map { case (k, v) => s"${esc(k)}: ${esc(v)}" }.mkString("{", ",", "}"))
-    graft.operators.Dedup.releaseCaches(spark)
+    graft.SessionLedger.release(spark)
     spark.stop()
   }
 }

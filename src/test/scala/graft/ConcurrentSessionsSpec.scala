@@ -9,14 +9,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, SimilaritySearch}
 
-/** Concurrent-session safety (VERDICT r14 item 6): Dedup.memoCache and the
-  * listener hooks are keyed by SparkSession and synchronized, but until this
+/** Concurrent-session safety (VERDICT r14 item 6): SessionLedger keeps one
+  * store per SparkSession behind that session's own lock, but until this
   * spec nothing ran two sessions through the dedup/similarity families AT
   * THE SAME TIME. Three `newSession()` children (shared SparkContext,
   * separate session state — the multi-tenant shape a long-lived driver
   * serves) run the whole family concurrently in interleaving-hostile
   * orders; every result must match the sequential baseline, and after
-  * per-session releaseCaches the shared context must hold exactly the
+  * per-session release the shared context must hold exactly the
   * persisted blocks it held before the test (no cross-session eviction, no
   * leaked blocks, no leaked memo keys).
   */
@@ -39,7 +39,7 @@ class ConcurrentSessionsSpec extends AnyFunSuite {
     // sequential baseline in the root session
     val baseline: Map[String, Seq[String]] =
       family.map(q => q.name -> fp(q.run(root, dir))).toMap
-    Dedup.releaseCaches(root)
+    SessionLedger.release(root)
 
     val sessions = Seq.fill(3)(root.newSession())
     val pool = Executors.newFixedThreadPool(sessions.length)
@@ -62,14 +62,15 @@ class ConcurrentSessionsSpec extends AnyFunSuite {
       }
       // while warm, each session owns its own memo entries
       sessions.foreach(s =>
-        assert(Dedup.memoKeysFor(s).nonEmpty, "memo should be warm per session"))
+        assert(SessionLedger.entries(s).values.exists(_ == SessionLedger.Persisted),
+          "memo should be warm per session"))
     } finally {
-      sessions.foreach(Dedup.releaseCaches)
+      sessions.foreach(s => SessionLedger.release(s))
       pool.shutdown()
     }
     sessions.foreach(s =>
-      assert(Dedup.memoKeysFor(s).isEmpty, "memo keys must not outlive release"))
-    // releaseCaches unpersists async (blocking=false): poll briefly before
+      assert(SessionLedger.entries(s).isEmpty, "memo keys must not outlive release"))
+    // release unpersists async (blocking=false): poll briefly before
     // declaring a leak
     val deadline = System.nanoTime() + 30.seconds.toNanos
     var leaked = root.sparkContext.getPersistentRDDs.keySet -- preBlocks
@@ -78,6 +79,6 @@ class ConcurrentSessionsSpec extends AnyFunSuite {
       leaked = root.sparkContext.getPersistentRDDs.keySet -- preBlocks
     }
     assert(leaked.isEmpty,
-      s"persisted blocks leaked past releaseCaches: ids=$leaked")
+      s"persisted blocks leaked past release: ids=$leaked")
   }
 }

@@ -234,7 +234,7 @@ class CorpusOpsSpec extends AnyFunSuite {
       col("dup_frac") > 1.0).count() == 0)
     assert(out.filter(col("copy_heavy") =!= (col("dup_frac") >= 0.5)).count() == 0)
     out.unpersist()
-    Dedup.releaseCaches(spark)
+    SessionLedger.release(spark)
   }
 
   test("q87: shares are normalized and cumulative share is monotone") {
@@ -293,6 +293,6 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(out.filter(col("src_lo") > col("src_hi")).count() == 0)
     assert(out.filter(col("dup_pairs") <= 0).count() == 0)
     out.unpersist()
-    Dedup.releaseCaches(spark)
+    SessionLedger.release(spark)
   }
 }

@@ -9,7 +9,11 @@ import graft.operators.Dedup
 class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val spark = TestSpark.spark
 
-  override def afterAll(): Unit = Dedup.releaseCaches(spark)
+  override def afterAll(): Unit = SessionLedger.release(spark)
+
+  /** The session's persisted memo entries, by (dir, tag). */
+  private def memoKeys: Set[(String, String)] =
+    SessionLedger.entries(spark).collect { case (k, SessionLedger.Persisted) => k }.toSet
 
   private lazy val exact = Dedup.jaccardPairs(spark, TestSpark.sf0001)
     .filter(org.apache.spark.sql.functions.col("jaccard") >= 0.8)
@@ -22,11 +26,11 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     // blocks and keep the rest warm)
     Dedup.q32MinHashLsh.run(spark, TestSpark.sf0001).count()
     Dedup.q32MinHashLsh.run(spark, TestSpark.sf001).count()
-    val dirs = Dedup.memoKeysFor(spark).map(_._1)
+    val dirs = memoKeys.map(_._1)
     assert(dirs.contains(TestSpark.sf0001) && dirs.contains(TestSpark.sf001))
 
-    Dedup.releaseCachesFor(spark, TestSpark.sf0001)
-    val after = Dedup.memoKeysFor(spark).map(_._1)
+    SessionLedger.release(spark, TestSpark.sf0001)
+    val after = memoKeys.map(_._1)
     assert(!after.contains(TestSpark.sf0001),
       "released dir must hold no memo entries")
     assert(after.contains(TestSpark.sf001),
@@ -34,8 +38,8 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // a released dir re-memoizes cleanly (no stale unpersisted handle reuse)
     Dedup.q32MinHashLsh.run(spark, TestSpark.sf0001).count()
-    assert(Dedup.memoKeysFor(spark).map(_._1).contains(TestSpark.sf0001))
-    Dedup.releaseCachesFor(spark, TestSpark.sf001)
+    assert(memoKeys.map(_._1).contains(TestSpark.sf0001))
+    SessionLedger.release(spark, TestSpark.sf001)
   }
 
   test("MinHash-LSH recovers high-Jaccard pairs (recall ≥ 0.8 at J≥0.8)") {

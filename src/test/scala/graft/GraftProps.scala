@@ -432,7 +432,7 @@ object GraftProps extends Properties("graft") {
       val init = wordList.toDF("word")
         .groupBy(col("word")).agg(count(lit(1)).as("freq"))
         .select(expr("filter(split(word, ''), s -> s <> '')").as("syms"), col("freq"))
-      val (got, _) = graft.operators.TextAnalysis.bpeTrainFrom(init, target, maxBatch = 4)
+      val (got, _) = graft.operators.TextAnalysis.bpeTrainFrom(init, "synthetic", target, maxBatch = 4)
       got == expected.toSeq
     }
 

@@ -77,7 +77,7 @@ class PlanAuditSpec extends AnyFunSuite {
       }
       if (bad.nonEmpty && !tinyWindowAllowlist(name)) Some(name) else None
     }
-    graft.operators.Dedup.releaseCaches(spark)
+    graft.SessionLedger.release(spark)
     assert(offenders.isEmpty,
       s"data-scale unpartitioned window (single-partition global sort) in: $offenders")
   }
@@ -156,7 +156,7 @@ class PlanAuditSpec extends AnyFunSuite {
         if (mode.isDefined) spark.conf.unset("spark.sql.cbo.planStats.enabled")
       }
     }
-    graft.operators.Dedup.releaseCaches(spark)
+    graft.SessionLedger.release(spark)
     assert(failures.isEmpty,
       s"executed-plan join strategy regressed (expected all-broadcast, no SMJ): $failures")
   }
@@ -168,7 +168,7 @@ class PlanAuditSpec extends AnyFunSuite {
         plan.contains("BroadcastNestedLoopJoin")
       if (nested && !deliberate(name)) Some(name) else None
     }
-    graft.operators.Dedup.releaseCaches(spark)
+    graft.SessionLedger.release(spark)
     assert(offenders.isEmpty,
       s"nested-loop/cartesian stages outside the deliberate list: $offenders")
   }

@@ -73,8 +73,8 @@ class TrainLoopSpec extends AnyFunSuite {
     }
     val init = vocab.toDF("syms", "freq")
     val merges = 16
-    val (seqMerges, seqSteps) = TextAnalysis.bpeTrainFrom(init, merges, maxBatch = 1)
-    val (batMerges, batSteps) = TextAnalysis.bpeTrainFrom(init, merges, maxBatch = 8)
+    val (seqMerges, seqSteps) = TextAnalysis.bpeTrainFrom(init, "synthetic", merges, maxBatch = 1)
+    val (batMerges, batSteps) = TextAnalysis.bpeTrainFrom(init, "synthetic", merges, maxBatch = 8)
     assert(batMerges == seqMerges, "batched trainer diverged from sequential")
     assert(seqSteps == merges)
     assert(batSteps == merges / 8, s"batches did not fill: $batSteps supersteps")
